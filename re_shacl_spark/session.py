@@ -5,7 +5,10 @@ local[] testing:
   - AQE on (runtime coalescing + skew-join splitting),
   - explicit shuffle-partition count from SPARK_GRAFT_CPUS (cluster: 2-3x cores),
   - Arrow enabled for every pandas/Arrow UDF path,
-  - broadcast threshold left at default; TBox/alias maps are broadcast explicitly.
+  - broadcast threshold left at default; TBox/alias maps are broadcast explicitly,
+  - driver heap a quarter of MemTotal within [1, 8] GiB (SPARK_DRIVER_MEM
+    overrides): the JVM shares a swapless box with the Python workers and
+    the page cache.
 """
 
 from __future__ import annotations
@@ -13,6 +16,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """A quarter of MemTotal, within [1 GiB, 8 GiB]."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(1024, min(8192, kb // 1024 // 4))}m"
 
 
 def get_spark(
@@ -38,7 +51,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # iterative fixpoints localCheckpoint() per round; replication not needed locally
         .config("spark.checkpoint.compress", "true")
         # NOT set: spark.rdd.compress / io.compression.codec=zstd — measured

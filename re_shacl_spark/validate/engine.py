@@ -1,22 +1,39 @@
-"""Distributed SHACL validation as Spark SQL aggregations.
+"""Distributed SHACL validation as one Spark SQL plan compiled from the shapes.
 
 The reference delegates validation to pyshacl on the fused in-memory graph
-(/root/reference/run_experiment.py:99-102, inference='none' after merging).
-Here the same reduced-validation contract is a *flat dataflow*:
+(inference='none' after merging).  Here the same reduced-validation contract
+is one flat dataflow, and the shapes decide which parts of it exist:
 
-  1. broadcast the compiled constraint table (shapes are KBs; triples are TBs),
-  2. one scan of TYPES for target selection (targetClass + subclass closure
-     down, pre-materialized by fusion),
-  3. one shuffle join values-to-focus,
-  4. one groupBy(shape, property-constraint, focus) computing EVERY aggregate
-     constraint (minCount/maxCount/hasValue + bad-value counts) in a single
-     pass — the per-shape early-termination strategy: a focus node's value
-     conformance is a short-circuiting boolean expression and all aggregates
-     share one shuffle,
-  5. violation rows = filters over the aggregate frame (+ per-value rows).
+  1. ``_compile`` flattens the shapes into a constraint table (one row per
+     property constraint, plus one per or/and/xone/qualified branch).  Only
+     the columns some constraint sets are kept, so a constraint family the
+     shapes do not use adds no join, column or aggregate: counts and value
+     facets, sh:class flags and sh:node refs, branches, hasValue and
+     uniqueLang, inverse and complex paths, pair, closed and sparql
+     constraints, and each target kind.
+  2. target rows (shape, focus): one scan of rdf:type against the broadcast
+     targetClass map (subclass closure expanded down), targetNode literals,
+     targetSubjectsOf/ObjectsOf predicate scans and SHACL-AF sh:select
+     targets; one broadcast join fans each target out to its shape's
+     constraints,
+  3. value rows: one broadcast path-map join puts the path filter into the
+     scan; per-value conformance is a row-local expression over the facet
+     columns (after the sh:class type join and the sh:node conforming-set
+     join, when those families occur).  Branch rows collapse per value — by
+     RDF term identity, lex + dtype + lang — in one groupBy that exists only
+     when branches do,
+  4. one groupBy(pc_id, shape, focus) over target ∪ value rows computes every
+     count and the set of bad values at once (a focus's distinct values at
+     one constraint are collected in one task): repeated targets collapse
+     there and values of non-target nodes drop out,
+  5. each aggregate row builds an array of (constraint, value) structs and
+     one explode emits the violations.
 
-#shuffles is O(1) in the number of shapes (Shape_30 has 641 shapes — per-shape
-jobs would be 641 scans; this is 1).
+For shapes with counts and value facets only (the corpus shapes), the plan
+has three broadcast stages and one shuffle whatever the number of shapes:
+over a checkpointed graph validate() runs 6 Spark jobs, the checkpoint and
+the emptiness probe included.  sh:class adds one shuffle join, branches one shuffle, and the
+pair, closed and sparql families their own joins.
 
 sh:node references are resolved by iterating the flat evaluation to fixpoint
 over the conforming-value sets (optimistic start — cycles converge downward),
@@ -25,11 +42,11 @@ depth-bounded by the shape-reference DAG.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from re_shacl_spark.model.triples import vocab
 from re_shacl_spark.query import Path as PathExpr
@@ -47,43 +64,33 @@ def _path_str(path) -> str | None:
 
 SH = vocab.SH
 
-_PC_SCHEMA = T.StructType(
-    [
-        T.StructField("pc_id", T.LongType()),
-        T.StructField("shape_id", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("inverse", T.BooleanType()),  # sh:inversePath traversal
-        T.StructField("min_count", T.IntegerType()),
-        T.StructField("max_count", T.IntegerType()),
-        T.StructField("clazz", T.StringType()),
-        T.StructField("datatype", T.StringType()),
-        T.StructField("node_kind", T.StringType()),
-        T.StructField("node_ref", T.StringType()),
-        T.StructField("in_values", T.ArrayType(T.StringType())),
-        T.StructField("has_value", T.StringType()),
-        T.StructField("pattern", T.StringType()),
-        T.StructField("min_length", T.IntegerType()),
-        T.StructField("max_length", T.IntegerType()),
-        T.StructField("min_inclusive", T.StringType()),   # numeric range facets:
-        T.StructField("max_inclusive", T.StringType()),   # lexical forms, compared
-        T.StructField("min_exclusive", T.StringType()),   # as doubles at eval time
-        T.StructField("max_exclusive", T.StringType()),
-        T.StructField("language_in", T.ArrayType(T.StringType())),
-        T.StructField("unique_lang", T.BooleanType()),
-        T.StructField("q_min", T.IntegerType()),  # sh:qualifiedMinCount
-        T.StructField("q_max", T.IntegerType()),  # sh:qualifiedMaxCount
-        T.StructField("negated", T.BooleanType()),
-        T.StructField("branch_idx", T.IntegerType()),  # null = base row; >=0 = branch
-        # branch combinator: null = base row; 'or' | 'and' | 'xone' = logical
-        # branch rows collapsed per-value (any / all / exactly-one); 'qual' =
-        # the sh:qualifiedValueShape row (counted per focus, never a per-value
-        # violation)
-        T.StructField("comb", T.StringType()),
-        T.StructField("is_not", T.BooleanType()),  # node-level sh:not property shape
-        T.StructField("severity", T.StringType()),  # effective sh:severity IRI
-        T.StructField("message", T.StringType()),   # effective sh:message
-    ]
-)
+# constraint-table columns and their Spark types.  The key columns are always
+# present; any other column joins the plan only when some constraint sets it.
+_KEY_COLS = {"pc_id": "long", "shape_id": "string", "path": "string"}
+# read at the per-focus aggregate (base rows only)
+_FOCUS_COLS = {
+    "min_count": "int", "max_count": "int", "has_value": "string",
+    "q_min": "int", "q_max": "int",  # sh:qualifiedMinCount / MaxCount
+    "unique_lang": "boolean",
+    "is_not": "boolean",  # node-level sh:not property shape
+    "severity": "string", "message": "string",
+}
+# read per value (base and branch rows)
+_VALUE_COLS = {
+    "clazz": "string", "datatype": "string", "node_kind": "string",
+    "node_ref": "string", "in_values": "array<string>", "pattern": "string",
+    "min_length": "int", "max_length": "int",
+    # numeric range facets: lexical forms, compared as doubles
+    "min_inclusive": "string", "max_inclusive": "string",
+    "min_exclusive": "string", "max_exclusive": "string",
+    "language_in": "array<string>", "negated": "boolean",
+}
+# branch rows: comb 'or' | 'and' | 'xone' collapse per value (any / all /
+# exactly one conforms); 'qual' is the sh:qualifiedValueShape row, counted
+# per focus and never a per-value violation
+_BRANCH_COLS = {"comb": "string", "branch_idx": "int"}
+_REPORT_COLS = "focus string, shape string, path string, constraint string, value string"
+_DETAIL_COLS = ", severity string, message string"
 
 
 @dataclass
@@ -91,74 +98,89 @@ class ValidationReport:
     violations: DataFrame  # (focus, shape, path, constraint, value)
     conforms: bool
     shapes_evaluated: int
+    # the violations frame before its checkpoint: its plan is the real
+    # dataflow (scripts/plan_audit.py reads it); not part of the report
+    plan_frame: DataFrame | None = field(default=None, compare=False, repr=False)
+
+
+def _facets(pc: PropertyConstraint) -> dict:
+    return {
+        "clazz": pc.clazz, "datatype": pc.datatype, "node_kind": pc.node_kind,
+        "node_ref": pc.node_ref, "in_values": pc.in_values, "pattern": pc.pattern,
+        "min_length": pc.min_length, "max_length": pc.max_length,
+        "min_inclusive": pc.min_inclusive, "max_inclusive": pc.max_inclusive,
+        "min_exclusive": pc.min_exclusive, "max_exclusive": pc.max_exclusive,
+        "language_in": pc.language_in, "negated": pc.negated or None,
+    }
 
 
 def _branch_groups(pc: PropertyConstraint) -> list[tuple[str, list[PropertyConstraint]]]:
-    """(combinator, branches) pairs riding a constraint's grid rows: sh:or
-    (any conforms), sh:and (all conform), sh:xone (exactly one conforms),
-    'qual' (the sh:qualifiedValueShape, counted per focus)."""
-    groups = []
-    if pc.or_branches:
-        groups.append(("or", pc.or_branches))
-    if pc.and_branches:
-        groups.append(("and", pc.and_branches))
-    if pc.xone_branches:
-        groups.append(("xone", pc.xone_branches))
-    if pc.qualified is not None:
-        groups.append(("qual", [pc.qualified]))
-    return groups
+    return [
+        (comb, branches)
+        for comb, branches in (
+            ("or", pc.or_branches), ("and", pc.and_branches),
+            ("xone", pc.xone_branches),
+            ("qual", [pc.qualified] if pc.qualified is not None else []),
+        )
+        if branches
+    ]
 
 
-def _pc_rows(shapes: list[NodeShape]) -> list[tuple]:
-    rows: list[tuple] = []
+def _compile(shapes: list[NodeShape]) -> tuple[list[dict], set[str]]:
+    """The constraint table — one dict per row — and the columns some row
+    sets: the constraint families the shapes use."""
+    rows: list[dict] = []
     pc_id = 0
     for ns in shapes:
-        pcs = [(pc, False) for pc in ns.properties]
-        if ns.self_constraint:
-            pcs.append((ns.self_constraint, False))
-        # node-level sh:not property shapes ride the same grid, flagged: the
+        # node-level sh:not property shapes ride the same table, flagged: the
         # focus violates iff the inner shape CONFORMS (counts + all values)
+        pcs = [(pc, None) for pc in ns.properties]
+        if ns.self_constraint:
+            pcs.append((ns.self_constraint, None))
         pcs += [(pc, True) for pc in ns.not_properties]
         for pc, is_not in pcs:
-            sev = pc.severity or ns.severity
-            msg = pc.message or ns.message
-            rows.append(
-                (
-                    pc_id, ns.shape_id, _path_str(pc.path), pc.inverse, pc.min_count, pc.max_count,
-                    pc.clazz, pc.datatype, pc.node_kind, pc.node_ref,
-                    pc.in_values, pc.has_value, pc.pattern, pc.min_length,
-                    pc.max_length, pc.min_inclusive, pc.max_inclusive,
-                    pc.min_exclusive, pc.max_exclusive, pc.language_in,
-                    pc.unique_lang, pc.q_min_count, pc.q_max_count,
-                    pc.negated, None, None, is_not, sev, msg,
-                )
-            )
+            key = {"pc_id": pc_id, "shape_id": ns.shape_id,
+                   "path": _path_str(pc.path), "inverse": pc.inverse or None}
+            rows.append({
+                **key, **_facets(pc),
+                "min_count": pc.min_count, "max_count": pc.max_count,
+                "has_value": pc.has_value, "q_min": pc.q_min_count,
+                "q_max": pc.q_max_count, "unique_lang": pc.unique_lang or None,
+                "is_not": is_not,
+                "severity": pc.severity or ns.severity,
+                "message": pc.message or ns.message,
+            })
             for comb, branches in _branch_groups(pc):
-                for bi, b in enumerate(branches):
-                    rows.append(
-                        (
-                            pc_id, ns.shape_id, _path_str(pc.path), pc.inverse, None, None,
-                            b.clazz, b.datatype, b.node_kind, b.node_ref,
-                            b.in_values, b.has_value, b.pattern, b.min_length,
-                            b.max_length, b.min_inclusive, b.max_inclusive,
-                            b.min_exclusive, b.max_exclusive, b.language_in,
-                            False, None, None,
-                            b.negated, bi, comb, is_not, sev, msg,
-                        )
-                    )
+                rows += [
+                    {**key, **_facets(b), "comb": comb, "branch_idx": bi}
+                    for bi, b in enumerate(branches)
+                ]
             pc_id += 1
-    return rows
+    return rows, {c for r in rows for c, v in r.items() if v is not None}
 
 
-def _targets(
+def _table_frame(
+    spark: SparkSession, table: list[dict], present: set[str], base: bool, cols: dict
+) -> DataFrame:
+    """Broadcast constraint table: base rows (branch rows too unless
+    ``base``), restricted to the present columns among ``cols``."""
+    use = {c: t for c, t in cols.items() if c in present or c in _KEY_COLS}
+    rows = [tuple(r.get(c) for c in use) for r in table if not (base and "comb" in r)]
+    schema = ", ".join(f"{c} {t}" for c, t in use.items())
+    return F.broadcast(spark.createDataFrame(rows, schema))
+
+
+def _target_rows(
     spark: SparkSession,
     triples: DataFrame,
     shapes: list[NodeShape],
     tbox: TBoxIndex | None,
 ) -> DataFrame:
-    """(shape_id, focus) — targetClass (expanded down the subclass closure; the
-    fused graph already materializes supertypes, so the closure expansion is a
-    correctness belt for pre-fusion inputs), implicit class targets, targetNode."""
+    """(shape_id, focus) for each target kind the shapes use — targetClass
+    (expanded down the subclass closure; the fused graph already materializes
+    supertypes, so the closure expansion is a correctness belt for pre-fusion
+    inputs), implicit class targets, targetNode, targetSubjectsOf/ObjectsOf
+    and SHACL-AF sh:select targets.  A focus reached twice appears twice."""
     cls_rows: list[tuple[str, str]] = []
     node_rows: list[tuple[str, str]] = []
     subj_rows: list[tuple[str, str]] = []
@@ -175,23 +197,21 @@ def _targets(
         subj_rows += [(p, ns.shape_id) for p in ns.target_subjects_of]
         obj_rows += [(p, ns.shape_id) for p in ns.target_objects_of]
 
-    types = triples.filter(F.col("p") == vocab.TYPE).select(
-        F.col("s").alias("focus"), F.col("o").alias("cls")
-    )
-    cls_map = F.broadcast(
-        spark.createDataFrame(cls_rows or [], "cls string, shape_id string")
-    )
-    by_class = types.join(cls_map, "cls").select("shape_id", "focus")
-    by_node = spark.createDataFrame(node_rows or [], "shape_id string, focus string")
-    out = by_class.unionByName(by_node)
+    parts: list[DataFrame] = []
+    if cls_rows:
+        cls_map = F.broadcast(spark.createDataFrame(cls_rows, "cls string, shape_id string"))
+        types = triples.filter(F.col("p") == vocab.TYPE).select(
+            F.col("s").alias("focus"), F.col("o").alias("cls")
+        )
+        parts.append(types.join(cls_map, "cls").select("shape_id", "focus"))
+    if node_rows:
+        parts.append(spark.createDataFrame(node_rows, "shape_id string, focus string"))
     # sh:targetSubjectsOf / targetObjectsOf: one broadcast predicate-map join
     # each — the predicate filter pushes into the scan
-    for rows2, col in ((subj_rows, "s"), (obj_rows, "o")):
-        if rows2:
-            pm = F.broadcast(spark.createDataFrame(rows2, "p string, shape_id string"))
-            out = out.unionByName(
-                triples.join(pm, "p").select("shape_id", F.col(col).alias("focus"))
-            )
+    for rows, col in ((subj_rows, "s"), (obj_rows, "o")):
+        if rows:
+            pm = F.broadcast(spark.createDataFrame(rows, "p string, shape_id string"))
+            parts.append(triples.join(pm, "p").select("shape_id", F.col(col).alias("focus")))
     # SHACL-AF custom targets: each sh:target/sh:select runs as one
     # distributed bgp plan; its ?this solutions ARE the focus set
     for ns in shapes:
@@ -199,93 +219,90 @@ def _targets(
             from re_shacl_spark.validate.sparql import evaluate, parse_select
 
             sol = evaluate(triples, parse_select(tgt.select, tgt.prefixes))
-            out = out.unionByName(
-                sol.select(
-                    F.lit(ns.shape_id).alias("shape_id"),
-                    F.col("this").alias("focus"),
-                )
-            )
-    return out.distinct()
+            parts.append(sol.select(
+                F.lit(ns.shape_id).alias("shape_id"), F.col("this").alias("focus")
+            ))
+    if not parts:
+        return spark.createDataFrame([], "shape_id string, focus string")
+    return reduce(DataFrame.unionByName, parts)
 
 
-def _value_conformance(col_prefix: str = "") -> F.Column:
-    """Short-circuiting per-value conformance for one constraint row: nodeKind →
-    datatype → in → class/node-ref flags (flags are join-produced booleans).
-    Null o (focus without values) is vacuously conforming.
+def _targets(
+    spark: SparkSession,
+    triples: DataFrame,
+    shapes: list[NodeShape],
+    tbox: TBoxIndex | None,
+) -> DataFrame:
+    """Distinct (shape_id, focus) target pairs."""
+    return _target_rows(spark, triples, shapes, tbox).distinct()
+
+
+def _value_conformance(cols: set[str]) -> F.Column:
+    """Per-value conformance of one constraint row, built from the facet
+    columns present: nodeKind, datatype, in, pattern, length, range and
+    languageIn facets, then the class/node-ref flags (join-produced).  A
+    facet column that is null on a row does not constrain it.
 
     Known pragmatic: sh:in / sh:hasValue compare by the value's STRING FORM
     (the shapes API carries their entries as plain strings; every committed
     shape graph lists IRIs or typed numbers with no IRI/literal pun), unlike
-    the count/value collapse below, which keys on full term identity."""
-    o = F.col("o")
-    is_lit = F.col("is_lit")
+    the count/value collapse, which keys on full term identity."""
+    o, is_lit, c = F.col("o"), F.col("is_lit"), F.col
+    checks: list[F.Column] = []
+
+    def facet(name: str, ok: F.Column) -> None:
+        if name in cols:
+            checks.append(F.when(c(name).isNull(), F.lit(True)).otherwise(ok))
+
+    if "node_kind" in cols:
+        nk = c("node_kind")
+        checks.append(
+            F.when(nk == SH + "IRI", ~is_lit & ~o.startswith("_:"))
+            .when(nk == SH + "Literal", is_lit)
+            .when(nk == SH + "BlankNode", ~is_lit & o.startswith("_:"))
+            .otherwise(F.lit(True))
+        )
     eff_dtype = F.coalesce(
         F.col("o_lit.dtype"),
-        F.when(F.col("o_lit.lang").isNotNull(), F.lit(vocab.RDF + "langString")).otherwise(
-            F.lit(vocab.XSD + "string")
-        ),
+        F.when(F.col("o_lit.lang").isNotNull(), F.lit(vocab.RDF + "langString"))
+        .otherwise(F.lit(vocab.XSD + "string")),
     )
-    node_kind_ok = (
-        F.when(F.col("node_kind").isNull(), F.lit(True))
-        .when(F.col("node_kind") == SH + "IRI", ~is_lit & ~o.startswith("_:"))
-        .when(F.col("node_kind") == SH + "Literal", is_lit)
-        .when(F.col("node_kind") == SH + "BlankNode", ~is_lit & o.startswith("_:"))
-        .otherwise(F.lit(True))
-    )
-    dtype_ok = F.when(F.col("datatype").isNull(), F.lit(True)).otherwise(
-        is_lit & (eff_dtype == F.col("datatype"))
-    )
-    in_ok = F.when(F.col("in_values").isNull(), F.lit(True)).otherwise(
-        F.array_contains(F.col("in_values"), o)
-    )
+    facet("datatype", is_lit & (eff_dtype == c("datatype")))
+    facet("in_values", F.array_contains(c("in_values"), o))
     # sh:pattern / sh:minLength / sh:maxLength apply to the value's string
     # form (lex for literals, the IRI otherwise; bnodes fail per spec)
     not_bnode = ~o.startswith("_:") | is_lit
-    pattern_ok = F.when(F.col("pattern").isNull(), F.lit(True)).otherwise(
-        not_bnode & F.regexp_like(o, F.col("pattern"))
-    )
-    len_ok = (
-        F.when(F.col("min_length").isNull(), F.lit(True)).otherwise(
-            not_bnode & (F.length(o) >= F.col("min_length"))
-        )
-        & F.when(F.col("max_length").isNull(), F.lit(True)).otherwise(
-            not_bnode & (F.length(o) <= F.col("max_length"))
-        )
-    )
-    class_ok = F.when(F.col("clazz").isNull(), F.lit(True)).otherwise(
-        F.col("_class_hit").isNotNull()
-    )
-    ref_ok = F.when(F.col("node_ref").isNull(), F.lit(True)).otherwise(
-        F.col("_ref_ok")
-    )
+    facet("pattern", not_bnode & F.regexp_like(o, c("pattern")))
+    facet("min_length", not_bnode & (F.length(o) >= c("min_length")))
+    facet("max_length", not_bnode & (F.length(o) <= c("max_length")))
     # numeric range facets: constraint lexical forms and the value both compare
     # as doubles; a non-numeric value violates any range facet (SHACL: value
     # nodes that cannot be compared are violations)
     num = o.try_cast("double")
-    range_ok = (
-        F.when(F.col("min_inclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num >= F.col("min_inclusive").try_cast("double"))
-        )
-        & F.when(F.col("max_inclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num <= F.col("max_inclusive").try_cast("double"))
-        )
-        & F.when(F.col("min_exclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num > F.col("min_exclusive").try_cast("double"))
-        )
-        & F.when(F.col("max_exclusive").isNull(), F.lit(True)).otherwise(
-            is_lit & num.isNotNull() & (num < F.col("max_exclusive").try_cast("double"))
-        )
-    )
+    for name, cmp in (
+        ("min_inclusive", num.__ge__), ("max_inclusive", num.__le__),
+        ("min_exclusive", num.__gt__), ("max_exclusive", num.__lt__),
+    ):
+        facet(name, is_lit & num.isNotNull() & cmp(c(name).try_cast("double")))
     # sh:languageIn: only language-tagged literals with a listed tag conform
-    lang_ok = F.when(F.col("language_in").isNull(), F.lit(True)).otherwise(
-        is_lit & F.array_contains(F.col("language_in"), F.coalesce(F.col("o_lit.lang"), F.lit("")))
-    )
-    conf = (
-        node_kind_ok & dtype_ok & in_ok & pattern_ok & len_ok & range_ok
-        & lang_ok & class_ok & ref_ok
-    )
-    conf = F.when(F.col("negated"), ~conf).otherwise(conf)
-    return F.when(o.isNull(), F.lit(True)).otherwise(conf)
+    facet("language_in", is_lit & F.array_contains(
+        c("language_in"), F.coalesce(F.col("o_lit.lang"), F.lit(""))
+    ))
+    facet("clazz", c("_class_hit").isNotNull())
+    facet("node_ref", c("_ref_ok"))
+    conf = reduce(lambda a, b: a & b, checks, F.lit(True))
+    if "negated" in cols:
+        conf = F.when(c("negated"), ~conf).otherwise(conf)
+    return conf
+
+
+def _detail_cols(with_details: bool) -> list[F.Column]:
+    if not with_details:
+        return []
+    return [
+        F.coalesce(F.col("severity"), F.lit(SH + "Violation")).alias("severity"),
+        F.col("message"),
+    ]
 
 
 def validate(
@@ -299,28 +316,8 @@ def validate(
     _extra_focus: dict[str, DataFrame] | None = None,
     _focus_subset: DataFrame | None = None,
 ) -> ValidationReport:
-    global _LAST_PLAN_FRAME
     shapes = [s for s in shapes if not s.deactivated]  # sh:deactivated true
-    pc_rows = _pc_rows(shapes)
-    if not pc_rows:
-        schema = "focus string, shape string, path string, constraint string, value string"
-        if with_details:
-            schema += ", severity string, message string"
-        empty = spark.createDataFrame([], schema)
-        if not _has_sparql(shapes):
-            return ValidationReport(empty, True, 0)
-        # shapes carrying ONLY sh:sparql constraints: no grid to build —
-        # evaluate the SPARQL blocks against the targets directly
-        targets = _targets(spark, triples, shapes, tbox)
-        sv = _sparql_violations(spark, triples, targets, shapes, with_details)
-        violations = empty.unionByName(sv) if sv is not None else empty
-        _LAST_PLAN_FRAME = violations
-        violations = violations.localCheckpoint(eager=True)
-        return ValidationReport(violations, violations.isEmpty(), len(shapes))
-    pcs = F.broadcast(spark.createDataFrame(pc_rows, _PC_SCHEMA))
-    base_pcs = pcs.filter(F.col("branch_idx").isNull())
-
-    targets = _targets(spark, triples, shapes, tbox)
+    targets = _target_rows(spark, triples, shapes, tbox)
     if _extra_focus:
         # sh:node conformance evaluation (from _resolve_node_refs): referenced
         # shapes are checked over targets ∪ values-at-referencing-paths, so a
@@ -328,230 +325,235 @@ def validate(
         # is not typed with the shape's target class (SHACL/pyshacl parity —
         # ADVICE r2).  Reporting calls never pass this: violations stay
         # target-scoped per spec.
-        extra_parts = [
+        targets = reduce(DataFrame.unionByName, [targets] + [
             df.select(F.lit(sid).alias("shape_id"), F.col("node").alias("focus"))
             for sid, df in sorted(_extra_focus.items())
-        ]
-        for x in extra_parts:
-            targets = targets.unionByName(x)
-        targets = targets.distinct()
+        ])
     if _focus_subset is not None:
         # incremental validation (validate/incremental.py): re-check only the
-        # foci a delta touched — the grid, values join and aggregations all
-        # shrink to the affected slice.  sh:node conforming sets stay GLOBAL
-        # (resolved by the unrestricted recursion below), so restriction never
-        # changes a re-checked focus's verdict.
+        # foci a delta touched — every per-focus join and aggregate shrinks to
+        # the affected slice.  sh:node conforming sets stay GLOBAL (resolved
+        # by the unrestricted recursion), so restriction never changes a
+        # re-checked focus's verdict.
         targets = targets.join(
-            _focus_subset.select(F.col("node").alias("focus")).distinct(),
-            "focus",
-            "left_semi",
+            _focus_subset.select(F.col("node").alias("focus")), "focus", "left_semi"
         )
-    # focus × constraint grid for this shape's targets
-    tp = targets.join(base_pcs.select("pc_id", "shape_id"), "shape_id")
-
-    # complex sh:path constraints: materialize each distinct path expression
+    # complex sh:path constraints: each distinct path expression materializes
     # ONCE as (focus, value) pairs under a virtual predicate named by the
-    # expression — the ordinary broadcast values join below then serves plain
-    # and complex paths identically.  Only the values join sees these rows:
-    # targets / class flags / closed checks keep the real graph.
+    # expression, so the values join serves plain and complex paths alike.
+    # Only the values join sees these rows: targets / class flags / closed
+    # checks keep the real graph.
     val_triples = _path_value_triples(triples, shapes)
+    foci = targets.distinct()  # joined only by the pair/closed/sparql families
+    parts = [
+        _grid_violations(
+            spark, triples, val_triples, targets, shapes, tbox, max_ref_depth,
+            with_details, _ref_sets,
+        ),
+        _pair_violations(spark, val_triples, foci, shapes, with_details),
+        _closed_violations(spark, triples, foci, shapes, with_details),
+        _sparql_violations(spark, triples, foci, shapes, with_details),
+    ]
+    parts = [x for x in parts if x is not None]
+    if parts:
+        plan = reduce(DataFrame.unionByName, parts)
+    else:
+        plan = spark.createDataFrame([], _REPORT_COLS + (_DETAIL_COLS if with_details else ""))
+    violations = plan.localCheckpoint(eager=True)
+    return ValidationReport(violations, violations.isEmpty(), len(shapes), plan)
 
-    # values at each constrained path: broadcast join puts path filter into the scan
-    paths = base_pcs.select(
-        F.col("pc_id").alias("v_pc_id"), F.col("path").alias("p"), "inverse"
-    ).filter(F.col("p").isNotNull())
-    vals = (
-        val_triples.join(paths.filter(~F.col("inverse")).drop("inverse"), "p")
-        .select(
-            F.col("v_pc_id").alias("pc_id"),
-            F.col("s").alias("focus"),
-            "o",
-            "o_lit",
-            "is_lit",
-        )
+
+def _grid_violations(
+    spark: SparkSession,
+    triples: DataFrame,
+    val_triples: DataFrame,
+    targets: DataFrame,
+    shapes: list[NodeShape],
+    tbox: TBoxIndex | None,
+    max_ref_depth: int | None,
+    with_details: bool,
+    ref_sets: dict[str, DataFrame] | None,
+) -> DataFrame | None:
+    """Count, value-facet, class, node, branch, hasValue, uniqueLang and
+    sh:not violations: one aggregate per (constraint, focus), one explode."""
+    table, cols = _compile(shapes)
+    has = lambda *names: any(n in cols for n in names)  # noqa: E731
+    value_fam = has(*_VALUE_COLS, "comb")
+    if not (value_fam or has("min_count", "max_count", "has_value", "q_min", "q_max",
+                             "unique_lang", "is_not")):
+        return None
+
+    # target rows: each (shape, focus) fanned out to the shape's constraints
+    focus_cols = [c for c in _FOCUS_COLS if c in cols]
+    pcs = _table_frame(spark, table, cols, True, {**_KEY_COLS, **_FOCUS_COLS})
+    t_rows = targets.join(pcs, "shape_id").select(
+        "pc_id", "shape_id", "focus", "path", *focus_cols, F.lit(True).alias("_target")
     )
-    if any(pc.inverse for ns in shapes for pc in _all_pcs(ns)):
+
+    # value rows: the path filter pushes into the scan via the broadcast map
+    v_cols = [c for c in {**_VALUE_COLS, **_BRANCH_COLS} if c in cols]
+    if "has_value" in cols:
+        v_cols.append("has_value")
+    vmap = _table_frame(
+        spark, table, cols, False,
+        {**_KEY_COLS, "inverse": "boolean", "has_value": "string", **_VALUE_COLS, **_BRANCH_COLS},
+    ).withColumnRenamed("path", "p").filter(F.col("p").isNotNull())
+    fwd = vmap.filter(F.col("inverse").isNull()) if "inverse" in cols else vmap
+    vals = val_triples.join(fwd, "p").select(
+        "pc_id", "shape_id", F.col("s").alias("focus"), "o", "o_lit", "is_lit", *v_cols
+    )
+    if "inverse" in cols:
         # sh:inversePath: the focus is the OBJECT of the edge; values are the
         # subjects (always resource nodes — s can't be a literal)
-        inv_vals = (
-            val_triples.join(paths.filter(F.col("inverse")).drop("inverse"), "p")
-            .select(
-                F.col("v_pc_id").alias("pc_id"),
-                F.col("o").alias("focus"),
-                F.col("s").alias("o"),
+        vals = vals.unionByName(
+            val_triples.join(vmap.filter(F.col("inverse")), "p").select(
+                "pc_id", "shape_id", F.col("o").alias("focus"), F.col("s").alias("o"),
                 F.lit(None).cast(triples.schema["o_lit"].dataType).alias("o_lit"),
-                F.lit(False).alias("is_lit"),
+                F.lit(False).alias("is_lit"), *v_cols,
             )
         )
-        vals = vals.unionByName(inv_vals)
-    grid = tp.join(vals, ["pc_id", "focus"], "left")
 
-    # class-conformance flags for any constraint row (base or or-branch):
-    # the fused graph materializes supertypes, so (o type clazz) is a direct hit
-    types = triples.filter(F.col("p") == vocab.TYPE).select(
-        F.col("s").alias("_inst"), F.col("o").alias("_cls")
-    ).distinct()
+    if "clazz" in cols:
+        # class flags: the fused graph materializes supertypes, so a direct
+        # (o type clazz) edge is the hit
+        classes = sorted({r["clazz"] for r in table if r.get("clazz")})
+        types = triples.filter(
+            (F.col("p") == vocab.TYPE) & F.col("o").isin(classes)
+        ).select(F.col("s").alias("_class_hit"), F.col("o").alias("_cls")).distinct()
+        vals = vals.join(
+            types,
+            (vals["o"] == types["_class_hit"]) & (vals["clazz"] == types["_cls"]) & ~vals["is_lit"],
+            "left",
+        ).drop("_cls")
+    if "node_ref" in cols:
+        ref_shapes = sorted({r["node_ref"] for r in table if r.get("node_ref")})
+        if ref_sets is not None:
+            # inner call from _resolve_node_refs: refs resolve against the
+            # PREVIOUS sweep's conforming sets (no fresh recursion — this is
+            # what makes refinement actually deepen past two reference hops)
+            vals = _join_ref_sets(vals, ref_sets)
+        else:
+            # depth = the REAL shape-reference DAG depth; cycles fall back to
+            # a fixpoint bound — each sweep can only shrink the sets
+            depth = max_ref_depth if max_ref_depth is not None else _ref_dag_depth(shapes)
+            vals = _resolve_node_refs(
+                spark, triples, shapes, tbox, vals, ref_shapes, depth, val_triples=val_triples
+            )
 
-    all_pc_cols = pcs.select(
-        "pc_id", "branch_idx", "comb", "clazz", "datatype", "node_kind", "node_ref",
-        "in_values", "has_value", "pattern", "min_length", "max_length",
-        "min_inclusive", "max_inclusive", "min_exclusive", "max_exclusive",
-        "language_in", "negated",
+    term = F.struct(
+        "o", "is_lit", F.col("o_lit.lang").alias("lang"), F.col("o_lit.dtype").alias("dtype")
     )
-
-    # explode grid × (base + branches) so or-branches evaluate in the same pass
-    g = grid.join(all_pc_cols, "pc_id")
-    g = g.join(
-        types,
-        (g["o"] == types["_inst"]) & (g["clazz"] == types["_cls"]) & (~g["is_lit"].eqNullSafe(F.lit(True)) | ~g["is_lit"]),
-        "left",
-    ).withColumnRenamed("_inst", "_class_hit").drop("_cls")
-
-    # sh:node conforming sets: iterate to fixpoint (optimistic start)
-    # node_ref is the 10th element of the _PC_SCHEMA row layout
-    _REF_IDX = [f.name for f in _PC_SCHEMA.fields].index("node_ref")
-    ref_shapes = sorted({r[_REF_IDX] for r in pc_rows if r[_REF_IDX]})
-    if ref_shapes and _ref_sets is not None:
-        # inner call from _resolve_node_refs: refs resolve against the
-        # PREVIOUS sweep's conforming sets (no fresh recursion — this is what
-        # makes refinement actually deepen past two reference hops)
-        g = _join_ref_sets(g, _ref_sets)
-    elif ref_shapes:
-        # depth = the REAL shape-reference DAG depth (LUBM chains are ≤4 deep;
-        # the old max(3, len(shapes)) bound scheduled up to 30 refinement
-        # sweeps on Shape_30 for nothing).  Cycles fall back to a fixpoint
-        # bound — each sweep can only shrink the conforming sets.
-        depth = max_ref_depth if max_ref_depth is not None else _ref_dag_depth(shapes)
-        g = _resolve_node_refs(
-            spark, triples, shapes, tbox, g, ref_shapes, depth, val_triples=val_triples
+    vals = vals.withColumn("_conf", _value_conformance(cols) if value_fam else F.lit(True))
+    vals = vals.withColumn("_term", term)
+    hv = (F.col("o") == F.col("has_value")) if "has_value" in cols else None
+    if "comb" in cols:
+        # collapse branch rows per VALUE: the base row must conform AND, per
+        # combinator group, or → any / and → all / xone → exactly one
+        base = F.col("comb").isNull()
+        conf_in = lambda comb: F.when(F.col("comb") == comb, F.col("_conf"))  # noqa: E731
+        aggs = [
+            F.max(F.when(base, F.col("_conf"))).alias("_base_conf"),
+            F.max(conf_in("or")).alias("_or_conf"),
+            F.min(conf_in("and")).alias("_and_conf"),
+            F.sum(conf_in("xone").cast("int")).alias("_xone_n"),
+            F.max(conf_in("qual")).alias("_q_conf"),
+        ]
+        if hv is not None:
+            aggs.append(F.max(F.when(base, hv)).alias("_hv"))
+        vals = vals.groupBy("pc_id", "shape_id", "focus", "_term").agg(*aggs).withColumn(
+            "_vconf",
+            F.col("_base_conf")
+            & F.coalesce(F.col("_or_conf"), F.lit(True))
+            & F.coalesce(F.col("_and_conf"), F.lit(True))
+            & F.coalesce(F.col("_xone_n") == 1, F.lit(True)),
         )
     else:
-        g = g.withColumn("_ref_ok", F.lit(True))
+        vals = vals.withColumn("_vconf", F.col("_conf")).withColumn("_q_conf", F.lit(False))
+        if hv is not None:
+            vals = vals.withColumn("_hv", hv)
 
-    conf = _value_conformance()
-    per_value = g.withColumn("_conf", conf).withColumn(
-        "_lang", F.col("o_lit.lang")
-    ).withColumn("_dtype", F.col("o_lit.dtype"))
-
-    # collapse branch rows per VALUE (RDF term identity: lex + dtype + lang —
-    # "1"^^xsd:int and "1"^^xsd:string are distinct values): base row must
-    # conform AND, per combinator group, or→any / and→all / xone→exactly one
-    vkey = ["pc_id", "shape_id", "focus", "o", "is_lit", "_lang", "_dtype"]
-    collapsed = per_value.groupBy(*vkey).agg(
-        F.max(F.when(F.col("comb").isNull(), F.col("_conf"))).alias("_base_conf"),
-        F.max(F.when(F.col("comb") == "or", F.col("_conf"))).alias("_or_conf"),
-        F.min(F.when(F.col("comb") == "and", F.col("_conf"))).alias("_and_conf"),
-        F.sum(F.when(F.col("comb") == "xone", F.col("_conf").cast("int"))).alias("_xone_n"),
-        F.max(F.when(F.col("comb") == "qual", F.col("_conf"))).alias("_q_conf"),
-        F.first("has_value", ignorenulls=True).alias("has_value"),
-    )
-    collapsed = collapsed.withColumn(
-        "_vconf",
-        F.col("_base_conf")
-        & F.coalesce(F.col("_or_conf"), F.lit(True))
-        & F.coalesce(F.col("_and_conf"), F.lit(True))
-        & F.when(
-            F.col("_xone_n").isNull() | F.col("o").isNull(), F.lit(True)
-        ).otherwise(F.col("_xone_n") == 1),
-    )
-
-    # single-pass per-focus aggregation: every count/exists constraint at once
-    agg = collapsed.groupBy("pc_id", "shape_id", "focus").agg(
-        F.count("o").alias("cnt"),
-        F.sum(F.when(~F.col("_vconf"), 1).otherwise(0)).alias("bad_vals"),
-        F.max(
-            F.when(F.col("has_value").isNotNull() & (F.col("o") == F.col("has_value")), True)
-        ).alias("has_v"),
-        F.sum(
-            F.when(F.col("_q_conf") & F.col("o").isNotNull(), 1).otherwise(0)
-        ).alias("q_cnt"),
-        # sh:uniqueLang: collapsed rows are distinct per (value, lang), so a
-        # tag count exceeding the distinct-tag count means two values share one
-        F.count(F.col("_lang")).alias("n_lang"),
-        F.count_distinct(F.col("_lang")).alias("n_lang_distinct"),
-    )
-    agg = agg.join(
-        base_pcs.select(
-            "pc_id", "path", "min_count", "max_count", "has_value",
-            "q_min", "q_max", "unique_lang", "is_not", "severity", "message",
+    # the one per-focus aggregate: repeated targets collapse, values of
+    # non-target nodes drop out
+    rows = t_rows.unionByName(
+        vals.select(
+            "pc_id", "shape_id", "focus", "_term", "_vconf",
+            *(["_hv"] if hv is not None else []),
+            *(["_q_conf"] if has("q_min", "q_max") else []),
         ),
-        "pc_id",
+        allowMissingColumns=True,
     )
-    pos = ~F.coalesce(F.col("is_not"), F.lit(False))
+    bad = lambda cond: F.collect_set(F.when(cond, F.col("_term")))  # noqa: E731
+    aggs = [F.max("_target").alias("_target"), F.max("path").alias("path")]
+    aggs += [F.max(c).alias(c) for c in focus_cols]
+    aggs.append(F.collect_set("_term").alias("_terms"))
+    if value_fam:
+        aggs.append(bad(~F.col("_vconf")).alias("_bad"))
+    if hv is not None:
+        aggs.append(F.max("_hv").alias("_has_v"))
+    if has("q_min", "q_max"):
+        aggs.append(F.size(bad(F.col("_q_conf"))).alias("_q_cnt"))
+    agg = rows.groupBy("pc_id", "shape_id", "focus").agg(*aggs).filter(F.col("_target"))
 
-    detail_cols = (
-        [
-            F.coalesce(F.col("severity"), F.lit(SH + "Violation")).alias("severity"),
-            F.col("message"),
-        ]
-        if with_details
-        else []
-    )
-    mk = lambda cond, constraint, value: agg.filter(cond).select(  # noqa: E731
-        F.col("focus"),
-        F.col("shape_id").alias("shape"),
-        F.col("path"),
-        F.lit(constraint).alias("constraint"),
-        value.cast("string").alias("value"),
-        *detail_cols,
-    )
-    v_min = mk(pos & F.col("min_count").isNotNull() & (F.col("cnt") < F.col("min_count")), "minCount", F.col("cnt"))
-    v_max = mk(pos & F.col("max_count").isNotNull() & (F.col("cnt") > F.col("max_count")), "maxCount", F.col("cnt"))
-    v_hv = mk(pos & F.col("has_value").isNotNull() & (~F.coalesce(F.col("has_v"), F.lit(False))), "hasValue", F.col("has_value"))
+    cnt = F.size("_terms")
+    pos = ~F.coalesce(F.col("is_not"), F.lit(False)) if "is_not" in cols else F.lit(True)
+    arms: list[F.Column] = []
+
+    def arm(name: str, cond: F.Column, value: F.Column) -> None:
+        arms.append(F.when(pos & cond, F.struct(
+            F.lit(name).alias("constraint"), value.cast("string").alias("value")
+        )))
+
+    if "min_count" in cols:
+        arm("minCount", cnt < F.col("min_count"), cnt)
+    if "max_count" in cols:
+        arm("maxCount", cnt > F.col("max_count"), cnt)
+    has_v = F.coalesce(F.col("_has_v"), F.lit(False)) if hv is not None else None
+    if hv is not None:
+        arm("hasValue", F.col("has_value").isNotNull() & ~has_v, F.col("has_value"))
     # sh:qualifiedMinCount/MaxCount: bounds on the count of values conforming
-    # to the qualified value shape (q_cnt aggregated from the 'qual' rows)
-    v_qmin = mk(pos & F.col("q_min").isNotNull() & (F.col("q_cnt") < F.col("q_min")), "qualifiedMinCount", F.col("q_cnt"))
-    v_qmax = mk(pos & F.col("q_max").isNotNull() & (F.col("q_cnt") > F.col("q_max")), "qualifiedMaxCount", F.col("q_cnt"))
-    v_ulang = mk(
-        pos & F.coalesce(F.col("unique_lang"), F.lit(False))
-        & (F.col("n_lang") > F.col("n_lang_distinct")),
-        "uniqueLang", F.col("n_lang") - F.col("n_lang_distinct"),
-    )
-    # node-level sh:not: violation iff the inner property shape CONFORMS —
-    # count bounds satisfied, every value conforms, hasValue present
-    inner_ok = (
-        (F.col("min_count").isNull() | (F.col("cnt") >= F.col("min_count")))
-        & (F.col("max_count").isNull() | (F.col("cnt") <= F.col("max_count")))
-        & (F.col("bad_vals") == 0)
-        & (F.col("has_value").isNull() | F.coalesce(F.col("has_v"), F.lit(False)))
-    )
-    v_not = mk(~pos & inner_ok, "not", F.col("cnt"))
-    v_vals = (
-        collapsed.filter(~F.col("_vconf"))
-        .join(base_pcs.select("pc_id", "path", "is_not", "severity", "message"), "pc_id")
-        .filter(~F.coalesce(F.col("is_not"), F.lit(False)))
-        .select(
-            "focus",
-            F.col("shape_id").alias("shape"),
-            "path",
-            F.lit("value").alias("constraint"),
-            F.col("o").cast("string").alias("value"),
-            *detail_cols,
+    # to the qualified value shape
+    if "q_min" in cols:
+        arm("qualifiedMinCount", F.col("_q_cnt") < F.col("q_min"), F.col("_q_cnt"))
+    if "q_max" in cols:
+        arm("qualifiedMaxCount", F.col("_q_cnt") > F.col("q_max"), F.col("_q_cnt"))
+    if "unique_lang" in cols:
+        # terms are distinct per (value, lang), so a tag count exceeding the
+        # distinct-tag count means two values share one
+        langs = F.transform(F.filter("_terms", lambda t: t["lang"].isNotNull()), lambda t: t["lang"])
+        dup = F.size(langs) - F.size(F.array_distinct(langs))
+        arm("uniqueLang", F.col("unique_lang") & (dup > 0), dup)
+    if "is_not" in cols:
+        # node-level sh:not: violation iff the inner property shape CONFORMS —
+        # count bounds satisfied, every value conforms, hasValue present
+        inner_ok = (
+            (F.col("min_count").isNull() | (cnt >= F.col("min_count")))
+            if "min_count" in cols else F.lit(True)
         )
+        if "max_count" in cols:
+            inner_ok &= F.col("max_count").isNull() | (cnt <= F.col("max_count"))
+        if value_fam:
+            inner_ok &= F.size("_bad") == 0
+        if hv is not None:
+            inner_ok &= F.col("has_value").isNull() | has_v
+        arms.append(F.when(~pos & inner_ok, F.struct(
+            F.lit("not").alias("constraint"), cnt.cast("string").alias("value")
+        )))
+    out = F.array_compact(F.array(*arms)) if arms else None
+    if value_fam:
+        bad_terms = F.filter("_bad", lambda t: pos) if "is_not" in cols else F.col("_bad")
+        per_value = F.transform(
+            bad_terms,
+            lambda t: F.struct(F.lit("value").alias("constraint"), t["o"].alias("value")),
+        )
+        out = F.concat(out, per_value) if out is not None else per_value
+    if with_details:
+        for c in ("severity", "message"):
+            if c not in cols:
+                agg = agg.withColumn(c, F.lit(None).cast("string"))
+    return agg.select(
+        "focus", F.col("shape_id").alias("shape"), "path", F.inline(out),
+        *_detail_cols(with_details),
     )
-    violations = (
-        v_min.unionByName(v_max).unionByName(v_hv)
-        .unionByName(v_qmin).unionByName(v_qmax).unionByName(v_ulang)
-        .unionByName(v_not).unionByName(v_vals)
-    )
-    for extra in (
-        _pair_violations(spark, val_triples, targets, shapes, with_details),
-        _closed_violations(spark, triples, targets, shapes, with_details),
-        _sparql_violations(spark, triples, targets, shapes, with_details),
-    ):
-        if extra is not None:
-            violations = violations.unionByName(extra)
-    # the checkpoint makes the returned frame's plan opaque; keep the logical
-    # frame around so scripts/plan_audit.py can audit the REAL dataflow
-    # (global declared at function top — the sparql-only fast path sets it too)
-    _LAST_PLAN_FRAME = violations
-    violations = violations.localCheckpoint(eager=True)
-    return ValidationReport(violations, violations.isEmpty(), len(shapes))
-
-
-# pre-checkpoint violations frame of the most recent validate() call
-# (plan-audit introspection only — never used for results)
-_LAST_PLAN_FRAME: DataFrame | None = None
 
 
 def _pair_violations(
@@ -615,17 +617,9 @@ def _pair_violations(
     b = side([(r[0], r[3]) for r in rows], "s", "o", "b")
 
     out = F.col("shape_id").alias("shape")
-    detail_cols = (
-        [
-            F.coalesce(F.col("severity"), F.lit(SH + "Violation")).alias("severity"),
-            F.col("message"),
-        ]
-        if with_details
-        else []
-    )
     mk = lambda df, c, v: df.select(  # noqa: E731
         "focus", out, "path", F.lit(c).alias("constraint"),
-        v.cast("string").alias("value"), *detail_cols,
+        v.cast("string").alias("value"), *_detail_cols(with_details),
     )
     parts: list[DataFrame] = []
     kinds = {r[4] for r in rows}
@@ -667,10 +661,7 @@ def _pair_violations(
         bad = pa.filter(~ok).select(*keep).distinct()
         parts.append(mk(bad, kind, F.col("a")))
 
-    res = parts[0]
-    for x in parts[1:]:
-        res = res.unionByName(x)
-    return res
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _closed_violations(
@@ -722,15 +713,6 @@ def _closed_violations(
         "focus", F.col("shape_id").alias("shape"), F.col("p").alias("path"),
         F.lit("closed").alias("constraint"), F.col("o").cast("string").alias("value"),
         *detail_cols,
-    )
-
-
-def _has_sparql(shapes: list[NodeShape]) -> bool:
-    """Any sh:sparql constraint — node-shape level or property-shape level."""
-    return any(
-        ns.sparql_constraints
-        or any(getattr(pc, "sparql_constraints", []) for pc in ns.properties)
-        for ns in shapes
     )
 
 
@@ -802,12 +784,7 @@ def _sparql_violations(
                     *detail_cols,
                 )
             )
-    if not parts:
-        return None
-    out = parts[0]
-    for x in parts[1:]:
-        out = out.unionByName(x)
-    return out
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def _path_value_triples(triples: DataFrame, shapes: list[NodeShape]) -> DataFrame:
@@ -838,9 +815,7 @@ def _path_value_triples(triples: DataFrame, shapes: list[NodeShape]) -> DataFram
             F.coalesce(F.col("b_is"), F.lit(False)).alias("is_lit"),
         ] + [F.lit(None).cast(triples.schema[c].dataType).alias(c) for c in extra]
         parts.append(pairs.select(*sel))
-    virt = parts[0]
-    for p_ in parts[1:]:
-        virt = virt.unionByName(p_)
+    virt = reduce(DataFrame.unionByName, parts)
     return triples.unionByName(virt.select(*triples.columns))
 
 
@@ -860,37 +835,46 @@ def _sub_pcs(pc: PropertyConstraint) -> list[PropertyConstraint]:
     return subs
 
 
-def _ref_dag_depth(shapes: list[NodeShape]) -> int:
-    """Longest sh:node reference chain (in shapes), measured in refinement
-    sweeps needed; cyclic graphs get len(shapes)+1 (downward-converging
-    fixpoint bound)."""
-    by_id = {s.shape_id: s for s in shapes}
-    edges: dict[str, set[str]] = {}
-    for s in shapes:
-        refs = set()
-        for pc in _all_pcs(s):
-            for x in _sub_pcs(pc):
-                if x.node_ref and x.node_ref in by_id:
-                    refs.add(x.node_ref)
-        edges[s.shape_id] = refs
+def _ref_edges(shapes: list[NodeShape]) -> dict[str, list[str]]:
+    """sh:node references among the given shapes (base and branch rows)."""
+    ids = {s.shape_id for s in shapes}
+    return {
+        s.shape_id: sorted({
+            x.node_ref for pc in _all_pcs(s) for x in _sub_pcs(pc) if x.node_ref in ids
+        })
+        for s in shapes
+    }
+
+
+def _ref_levels(edges: dict[str, list[str]]) -> dict[str, int] | None:
+    """Each shape's depth in the sh:node reference DAG (1 = references no
+    shape), or None when the references cycle."""
     memo: dict[str, int] = {}
     onstack: set[str] = set()
 
     def depth(sid: str) -> int:
-        if sid in memo:
-            return memo[sid]
-        if sid in onstack:
-            raise RecursionError  # cycle
-        onstack.add(sid)
-        d = 1 + max((depth(r) for r in edges.get(sid, ())), default=0)
-        onstack.discard(sid)
-        memo[sid] = d
-        return d
+        if sid not in memo:
+            if sid in onstack:
+                raise RecursionError  # cycle
+            onstack.add(sid)
+            memo[sid] = 1 + max((depth(r) for r in edges[sid]), default=0)
+            onstack.discard(sid)
+        return memo[sid]
 
     try:
-        return max((depth(s) for s in edges), default=1)
+        for sid in edges:
+            depth(sid)
     except RecursionError:
-        return len(shapes) + 1
+        return None
+    return memo
+
+
+def _ref_dag_depth(shapes: list[NodeShape]) -> int:
+    """Longest sh:node reference chain (in shapes), measured in refinement
+    sweeps needed; cyclic graphs get len(shapes)+1 (downward-converging
+    fixpoint bound)."""
+    levels = _ref_levels(_ref_edges(shapes))
+    return max(levels.values(), default=1) if levels is not None else len(shapes) + 1
 
 
 def _ref_value_sets(
@@ -968,14 +952,6 @@ def _resolve_node_refs(
         spark, val_triples if val_triples is not None else triples, shapes, tbox, by_id
     )
 
-    def refs_of(sid: str) -> list[str]:
-        out = []
-        for pc in _all_pcs(by_id[sid]):
-            for x in _sub_pcs(pc):
-                if x.node_ref and x.node_ref in by_id:
-                    out.append(x.node_ref)
-        return out
-
     def conforming_sets(sids: list[str], ref_sets: dict[str, DataFrame]) -> dict[str, DataFrame]:
         # conformance over targets ∪ referenced values (sh:node checks
         # membership of the value in the conforming set, so every value the
@@ -1002,37 +978,15 @@ def _resolve_node_refs(
             out[sid] = evaluated.join(bad, "node", "left_anti").localCheckpoint(eager=True)
         return out
 
-    # acyclic (the committed workloads): resolve in dependency order, each
-    # referenced shape validated exactly once with its deps already final
-    order: list[str] = []
-    seen: dict[str, int] = {}  # 0 = on stack, 1 = done
-
-    def topo(sid: str) -> bool:
-        if seen.get(sid) == 1:
-            return True
-        if seen.get(sid) == 0:
-            return False  # cycle
-        seen[sid] = 0
-        for r in refs_of(sid):
-            if not topo(r):
-                return False
-        seen[sid] = 1
-        order.append(sid)
-        return True
-
-    acyclic = all(topo(sid) for sid in resolvable)
+    levels = _ref_levels(_ref_edges(shapes))
     conforming: dict[str, DataFrame] = {}
-    if acyclic:
-        # batch shapes of the same dependency LEVEL into one validate() —
-        # LUBM's 4-6 referenced shapes resolve in depth() calls, not one each
-        level_of: dict[str, int] = {}
-        for sid in order:  # topological: refs resolved before dependents
-            level_of[sid] = 1 + max((level_of[r] for r in refs_of(sid)), default=0)
-        levels: dict[int, list[str]] = {}
-        for sid in order:
-            levels.setdefault(level_of[sid], []).append(sid)
-        for lvl in sorted(levels):
-            conforming.update(conforming_sets(levels[lvl], conforming))
+    if levels is not None:
+        # acyclic (the committed workloads): resolve in dependency order, one
+        # validate() per dependency LEVEL with the levels below already final
+        # — LUBM's 4-6 referenced shapes resolve in depth() calls
+        for lvl in sorted({levels[sid] for sid in resolvable}):
+            batch = [sid for sid in resolvable if levels[sid] == lvl]
+            conforming.update(conforming_sets(batch, conforming))
     else:
         # cyclic shape graph: optimistic start, sweep to downward fixpoint
         for _ in range(max(1, depth)):
@@ -1053,9 +1007,7 @@ def _join_ref_sets(g: DataFrame, conforming: dict[str, DataFrame]) -> DataFrame:
     ]
     if not parts:
         return g.withColumn("_ref_ok", F.lit(True))
-    conf_union = parts[0]
-    for x in parts[1:]:
-        conf_union = conf_union.unionByName(x)
+    conf_union = reduce(DataFrame.unionByName, parts)
     g = g.join(
         conf_union,
         (g["node_ref"] == conf_union["_ref_shape"]) & (g["o"] == conf_union["_ref_node"]),
@@ -1103,7 +1055,4 @@ def validate_fail_fast(
             return ValidationReport(viol, False, i + first + 1)
         i += size
         size *= 2
-    empty = spark.createDataFrame(
-        [], "focus string, shape string, path string, constraint string, value string"
-    )
-    return ValidationReport(empty, True, len(shapes))
+    return ValidationReport(spark.createDataFrame([], _REPORT_COLS), True, len(shapes))

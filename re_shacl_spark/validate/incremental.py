@@ -23,9 +23,10 @@ the graph):
   affected too — one reverse hop per shape-reference DAG level, walking the
   referencing paths backwards (ref-DAG-depth rounds of one join each).
 
-Complex ``sh:path`` expressions (sequence/closure) can propagate an edge
-insertion to foci arbitrarily far away, so their presence falls back to full
-re-validation — honestly gated, not silently wrong.
+Complex ``sh:path`` expressions (sequence/closure), sh:sparql constraints
+and SHACL-AF sh:select targets can propagate an edge insertion to foci
+arbitrarily far away, so their presence falls back to full re-validation —
+honestly gated, not silently wrong.
 
 Scale shape: the affected set is |delta|-proportional; the restricted
 ``validate(_focus_subset=...)`` call shrinks the target grid, the values join
@@ -148,14 +149,18 @@ def validate_delta(
     ``validate(spark, base ∪ delta, shapes)`` row for row.
     """
     full = base.unionByName(delta)
-    # sh:sparql constraints join arbitrary patterns — a delta edge can flip a
-    # solution whose focus the reverse-path widening below cannot see, so
-    # they have no local affected set either; validate fully
-    from re_shacl_spark.validate.engine import _has_sparql
-
+    # sh:sparql constraints and SHACL-AF sh:select targets join arbitrary
+    # patterns — a delta edge can flip a solution (or pull a node into the
+    # target set) two hops from any focus the reverse-path widening below
+    # can see, so they have no local affected set either; validate fully
+    sparql = any(
+        ns.sparql_constraints or ns.sparql_targets
+        or any(pc.sparql_constraints for pc in ns.properties)
+        for ns in shapes
+    )
     complex_paths = any(
         isinstance(pc.path, PathExpr) for ns in shapes for pc in _all_pcs(ns)
-    ) or _has_sparql(shapes)
+    )
     # a sequence/closure path can carry an edge insertion to arbitrarily
     # distant foci, and a subclass-axiom delta re-scopes targets globally —
     # neither has a local affected set; validate fully (mirrors fuse_delta's
@@ -163,7 +168,7 @@ def validate_delta(
     tbox_delta = not delta.filter(
         F.col("p") == "http://www.w3.org/2000/01/rdf-schema#subClassOf"
     ).isEmpty()
-    if complex_paths or tbox_delta:
+    if sparql or complex_paths or tbox_delta:
         return validate(spark, full, shapes, tbox, with_details=with_details)
     affected = _affected_foci(full, delta, shapes)
     fresh = validate(

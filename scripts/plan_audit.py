@@ -178,9 +178,18 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|",
     ]
     excerpts = []
-    from re_shacl_spark.validate import engine as vengine
+    # validation queries return a checkpointed frame (opaque plan); record
+    # each report so the audit reads its pre-checkpoint plan_frame instead
+    reports = []
+    validate = kgbench.validate
 
+    def recording_validate(*a, **kw):
+        reports.append(validate(*a, **kw))
+        return reports[-1]
+
+    kgbench.validate = recording_validate
     for name in AUDITED:
+        reports.clear()
         if name == "kg_pagerank":
             # the production path checkpoints every round (opaque plan);
             # audit the same dataflow with lineage kept visible
@@ -225,10 +234,8 @@ kg:CustRegionShape a sh:NodeShape ;
                              checkpoint=False)
         else:
             df = kgbench.QUERIES[name](spark, SF)
-        # validation queries return a checkpointed frame (opaque plan);
-        # audit the pre-checkpoint dataflow the engine stashed instead
-        if name.startswith("v_") and vengine._LAST_PLAN_FRAME is not None:
-            df = vengine._LAST_PLAN_FRAME
+        if name.startswith("v_") and reports:
+            df = reports[-1].plan_frame
         plan = df._jdf.queryExecution().executedPlan().toString()
         s = summarize(plan)
         lines.append(

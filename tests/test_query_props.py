@@ -10,10 +10,11 @@ Example counts are kept low — every example runs Spark join jobs.
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from re_shacl_spark.model.triples import iri_triple, lit_triple, triples_df
@@ -504,29 +505,85 @@ def test_aggregate_matches_naive(spark, case):
 
 
 # ---------------------------------------------------------------------------
-# SHACL validation: random data + one random property shape vs a naive
-# validator (counts over distinct value TERMS, per-term value conformance)
+# SHACL validation: random data + 1-3 random property shapes (so one call
+# mixes constraint families) vs a naive validator (counts over distinct value
+# TERMS, per-term value conformance)
 # ---------------------------------------------------------------------------
 
 XSD_STRING = XSD + "string"
 XSD_INT = XSD + "integer"
 SH_NS = "http://www.w3.org/ns/shacl#"
+TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+
+
+def _opt(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+facets_st = st.fixed_dictionaries({
+    "path": st.sampled_from(PREDS),
+    "inverse": st.booleans(),
+    "min_count": _opt(st.integers(0, 2)),
+    "max_count": _opt(st.integers(0, 2)),
+    "datatype": _opt(st.sampled_from([XSD_STRING, XSD_INT])),
+    "node_kind": _opt(st.sampled_from([SH_NS + "IRI", SH_NS + "Literal"])),
+    "min_length": _opt(st.integers(1, 5)),
+    "max_length": _opt(st.integers(1, 5)),
+    "has_value": _opt(st.sampled_from(NODES)),
+    "in_values": _opt(st.lists(st.sampled_from(NODES), min_size=1, max_size=2, unique=True)),
+    "pattern": _opt(st.sampled_from(["a$", "^n:[bc]"])),
+})
 
 
 @st.composite
 def shacl_case_st(draw):
     graph = draw(graph_st)
     typed = draw(st.lists(st.sampled_from(NODES), max_size=3, unique=True))
-    facets = {
-        "min_count": draw(st.one_of(st.none(), st.integers(0, 2))),
-        "max_count": draw(st.one_of(st.none(), st.integers(0, 2))),
-        "datatype": draw(st.one_of(st.none(), st.sampled_from([XSD_STRING, XSD_INT]))),
-        "node_kind": draw(
-            st.one_of(st.none(), st.sampled_from([SH_NS + "IRI", SH_NS + "Literal"]))
-        ),
-        "min_length": draw(st.one_of(st.none(), st.integers(1, 5))),
-    }
-    return graph, typed, facets
+    shapes = draw(st.lists(facets_st, min_size=1, max_size=3))
+    return graph, typed, shapes
+
+
+def _naive_shacl(graph, typed, shapes):
+    """Violations as a Counter of (shape, focus, constraint).  sh:in and
+    sh:hasValue compare a value's string form (the engine's documented
+    pragmatic); so does the focus of an inverse path — foci carry no term
+    tag, so an inverse path's values are the subjects of edges whose object
+    has the focus's string form, a punning literal included."""
+    want = Counter()
+    for i, f in enumerate(shapes):
+        sid = f"s:S{i}"
+        for x in typed:
+            if f["inverse"]:
+                vals = {("I", s) for s, p, o in graph if p == f["path"] and o[1] == x}
+            else:
+                vals = {o for s, p, o in graph if s == x and p == f["path"]}
+            if f["min_count"] is not None and len(vals) < f["min_count"]:
+                want[(sid, x, "minCount")] += 1
+            if f["max_count"] is not None and len(vals) > f["max_count"]:
+                want[(sid, x, "maxCount")] += 1
+            if f["has_value"] is not None and all(v[1] != f["has_value"] for v in vals):
+                want[(sid, x, "hasValue")] += 1
+            for v in vals:
+                is_lit = v[0] == "L"
+                eff_dtype = (v[2] or (XSD + "langString" if v[3] else XSD_STRING)) if is_lit else None
+                ok = True
+                if f["datatype"] is not None:
+                    ok = ok and is_lit and eff_dtype == f["datatype"]
+                if f["node_kind"] == SH_NS + "IRI":
+                    ok = ok and not is_lit
+                elif f["node_kind"] == SH_NS + "Literal":
+                    ok = ok and is_lit
+                if f["min_length"] is not None:
+                    ok = ok and len(v[1]) >= f["min_length"]
+                if f["max_length"] is not None:
+                    ok = ok and len(v[1]) <= f["max_length"]
+                if f["in_values"] is not None:
+                    ok = ok and v[1] in f["in_values"]
+                if f["pattern"] is not None:
+                    ok = ok and re.search(f["pattern"], v[1]) is not None
+                if not ok:
+                    want[(sid, x, "value")] += 1
+    return want
 
 
 @given(shacl_case_st())
@@ -535,44 +592,77 @@ def test_validate_matches_naive_shacl(spark, case):
     from re_shacl_spark.validate.engine import validate
     from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
 
-    graph, typed, facets = case
-    TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    graph, typed, shapes = case
     rows = _rows(graph) + [iri_triple(s, TYPE, "c:C") for s in typed]
     df = triples_df(spark, rows)
-    shape = NodeShape(
-        shape_id="s:S",
-        target_classes=["c:C"],
-        properties=[PropertyConstraint(path="p:p", **facets)],
-    )
-    rep = validate(spark, df, [shape])
-    got = Counter((r["focus"], r["constraint"]) for r in rep.violations.collect())
+    node_shapes = [
+        NodeShape(shape_id=f"s:S{i}", target_classes=["c:C"],
+                  properties=[PropertyConstraint(**f)])
+        for i, f in enumerate(shapes)
+    ]
+    rep = validate(spark, df, node_shapes)
+    got = Counter((r["shape"], r["focus"], r["constraint"]) for r in rep.violations.collect())
+    want = _naive_shacl(graph, typed, shapes)
+    assert got == want, f"typed={typed} shapes={shapes}"
+    assert rep.conforms == (not want)
 
-    want = Counter()
-    for f in typed:
-        vals = {
-            (o if o[0] == "L" else ("I", o[1]))
-            for s, p, o in graph
-            if s == f and p == "p:p"
-        }
-        if facets["min_count"] is not None and len(vals) < facets["min_count"]:
-            want[(f, "minCount")] += 1
-        if facets["max_count"] is not None and len(vals) > facets["max_count"]:
-            want[(f, "maxCount")] += 1
-        for v in vals:
-            is_lit = v[0] == "L"
-            eff_dtype = (v[2] or (XSD + "langString" if v[3] else XSD_STRING)) if is_lit else None
-            ok = True
-            if facets["datatype"] is not None:
-                ok = ok and is_lit and eff_dtype == facets["datatype"]
-            if facets["node_kind"] == SH_NS + "IRI":
-                ok = ok and not is_lit
-            elif facets["node_kind"] == SH_NS + "Literal":
-                ok = ok and is_lit
-            if facets["min_length"] is not None:
-                ok = ok and len(v[1]) >= facets["min_length"]
-            if not ok:
-                want[(f, "value")] += 1
-    assert got == want, f"typed={typed} facets={facets}"
+
+# incremental ≡ full: validate_delta over an additive delta equals a full
+# validate(base ∪ delta), for random shapes whose targets include a two-hop
+# SHACL-AF sh:select (which no local affected-focus walk can see)
+TWO_HOP_TARGET = "SELECT ?this WHERE { ?this <p:p> ?x . ?x <p:q> ?y }"
+
+
+@st.composite
+def delta_case_st(draw):
+    base = draw(graph_st)
+    delta = draw(st.lists(triple_st, min_size=1, max_size=4, unique=True))
+    typed = draw(st.lists(st.sampled_from(NODES), max_size=3, unique=True))
+    n_base_typed = draw(st.integers(0, len(typed)))
+    targets = st.sampled_from(["class", "node", "subjects", "sparql"])
+    shapes = draw(st.lists(st.tuples(targets, facets_st), min_size=1, max_size=2))
+    return base, delta, typed[:n_base_typed], typed[n_base_typed:], shapes
+
+
+_NO_FACETS = {k: None for k in (
+    "min_count", "max_count", "datatype", "node_kind", "min_length", "max_length",
+    "has_value", "in_values", "pattern",
+)}
+
+
+@given(delta_case_st())
+# the delta edge n:b p:q n:c pulls n:a into the two-hop target set; n:a is
+# neither a delta subject nor a delta object
+@example((
+    [("n:a", "p:p", ("I", "n:b"))], [("n:b", "p:q", ("I", "n:c"))], [], [],
+    [("sparql", {"path": "p:p", "inverse": False, **_NO_FACETS, "max_count": 0})],
+))
+@SETTINGS
+def test_validate_delta_matches_full(spark, case):
+    from re_shacl_spark.validate.engine import validate
+    from re_shacl_spark.validate.incremental import validate_delta
+    from re_shacl_spark.validate.shapes import NodeShape, PropertyConstraint
+    from re_shacl_spark.validate.sparql import SparqlConstraint
+
+    base_g, delta_g, base_typed, delta_typed, shapes = case
+    base = triples_df(spark, _rows(base_g) + [iri_triple(s, TYPE, "c:C") for s in base_typed])
+    delta = triples_df(spark, _rows(delta_g) + [iri_triple(s, TYPE, "c:C") for s in delta_typed])
+    target = {
+        "class": {"target_classes": ["c:C"]},
+        "node": {"target_nodes": ["n:a"]},
+        "subjects": {"target_subjects_of": ["p:q"]},
+        "sparql": {"sparql_targets": [SparqlConstraint(select=TWO_HOP_TARGET)]},
+    }
+    node_shapes = [
+        NodeShape(shape_id=f"s:S{i}", properties=[PropertyConstraint(**f)], **target[kind])
+        for i, (kind, f) in enumerate(shapes)
+    ]
+    base_rep = validate(spark, base, node_shapes)
+    inc = validate_delta(spark, base, delta, node_shapes, base_rep)
+    full = validate(spark, base.unionByName(delta), node_shapes)
+    assert Counter(tuple(r) for r in inc.violations.collect()) == \
+        Counter(tuple(r) for r in full.violations.collect()), f"shapes={shapes}"
+    assert inc.conforms == full.conforms
 
 
 # ---------------------------------------------------------------------------

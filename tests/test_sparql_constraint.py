@@ -268,6 +268,30 @@ def test_validate_delta_sparql_falls_back_to_full(spark):
     assert got == want == {(EX + "c2", "sparql", "-9")}
 
 
+def test_validate_delta_sparql_target_falls_back_to_full(spark):
+    """A two-hop sh:select target pulls n into the focus set through a delta
+    edge between two OTHER nodes (x kg:b y): n is neither a delta subject
+    nor a delta object, so only full validation sees its new violation."""
+    from re_shacl_spark.validate.incremental import validate_delta
+    from re_shacl_spark.validate.shapes import PropertyConstraint
+
+    base = triples_df(spark, [iri_triple(EX + "n", EX + "a", EX + "x")])
+    delta = triples_df(spark, [iri_triple(EX + "x", EX + "b", EX + "y")])
+    tgt = SparqlConstraint(
+        select="PREFIX kg: <http://x.org/> SELECT ?this WHERE "
+               "{ ?this kg:a ?x . ?x kg:b ?y }",
+    )
+    shapes = [NodeShape("S", sparql_targets=[tgt],
+                        properties=[PropertyConstraint(path=EX + "p", min_count=1)])]
+    base_rep = validate(spark, base, shapes)
+    assert base_rep.conforms  # no target yet
+    inc = validate_delta(spark, base, delta, shapes, base_rep)
+    want = {tuple(r) for r in
+            validate(spark, base.unionByName(delta), shapes).violations.collect()}
+    got = {tuple(r) for r in inc.violations.collect()}
+    assert got == want == {(EX + "n", "S", EX + "p", "minCount", "0")}
+
+
 # ---------------------------------------------------------------------------
 # SHACL-AF: custom SPARQL targets + SPARQLRule inference
 # ---------------------------------------------------------------------------

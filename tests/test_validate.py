@@ -594,3 +594,35 @@ def test_validate_delta_fallbacks(spark):
     assert {tuple(r) for r in inc.violations.collect()} == \
         {tuple(r) for r in full.violations.collect()}
     assert inc.conforms  # a reaches b,c after the delta
+
+
+def test_corpus_shapes_validate_job_count(spark):
+    """validate() compiles one plan from the shapes: the corpus shapes (only
+    minCount, maxCount and nodeKind) need no class, branch or pair joins, so
+    the call launches a handful of Spark jobs — the target broadcasts, one
+    shuffle, the checkpoint and the emptiness probe — not one per
+    constraint kind."""
+    from re_shacl_spark import corpus
+    from re_shacl_spark.extract.emit import emit_triples
+    from re_shacl_spark.extract.html import extract_text
+    from re_shacl_spark.extract.mentions import detect_mentions
+    from re_shacl_spark.job import CORPUS_TBOX, corpus_shapes
+    from re_shacl_spark.pipeline import fuse
+
+    pages = corpus.generate_pages(spark, 60, seed=3)
+    s1 = extract_text(pages).drop("html")
+    s2 = detect_mentions(s1.select("url", "text", "lang"), corpus.alias_rows(), drop=("text",))
+    g = emit_triples(s2, corpus.ENTITY_CLASSES).unionByName(
+        triples_df(spark, [iri_triple(*x) for x in CORPUS_TBOX]))
+    fused = fuse(spark, g).triples.localCheckpoint(eager=True)
+
+    sc = spark.sparkContext
+    group = "test-validate-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        rep = validate(spark, fused, corpus_shapes())
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert not rep.conforms and rep.violations.count() > 0
+    assert len(jobs) <= 12, f"validate(corpus_shapes()) launched {len(jobs)} Spark jobs"
